@@ -14,6 +14,18 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory() -> str:
+    """`SPARK_GRAFT_DRIVER_MEM` if set, else half of physical memory
+    capped at 24g: a fixed 24g heap would let a local driver JVM grow
+    past what a small host has, and be killed by the kernel instead of
+    failing with an OutOfMemoryError."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(24 * 1024, total // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "dataingestiontohana_spark",
     master: str | None = None,
@@ -55,7 +67,7 @@ def get_spark(
         # (guide §5: keep the driver out of the hot path). Purely
         # diagnostic metadata; no plan or result changes.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -300,11 +300,111 @@ def test_upsert_sink_partition_write_mode_executor_side(spark, tmp_path):
     rows = sensor_rows(spark, 200).repartition(4)
     sink.write(rows, upsert=True)
     sink.write(rows, upsert=True)  # idempotent replay converges
+    assert _sink_audit(db) == (200, 200, 200)
+
+
+def _sink_audit(db: str) -> tuple[int, int, int]:
+    """(rows, distinct counters, counter span) of the sensor_sink table."""
+    con = sqlite3.connect(db)
+    try:
+        n, uniq, lo, hi = con.execute(
+            'SELECT COUNT(*), COUNT(DISTINCT "counter"), MIN("counter"), '
+            'MAX("counter") FROM "sensor_sink"'
+        ).fetchone()
+    finally:
+        con.close()
+    return n, uniq, (hi - lo + 1) if n else 0
+
+
+def _pid_recording_sink(db: str) -> UpsertSink:
+    """Default-mode sink whose connections record the pid of the process
+    that opened them in the side table `opened` (committed with the
+    rows). The factory is a closure, so it pickles by value into the
+    executor-side write."""
+
+    def connect():
+        con = sqlite3.connect(db, timeout=30)
+        con.execute("INSERT INTO opened VALUES (?)", (os.getpid(),))
+        return con
 
     con = sqlite3.connect(db)
-    n, uniq, lo, hi = con.execute(
-        'SELECT COUNT(*), COUNT(DISTINCT "counter"), MIN("counter"), '
-        'MAX("counter") FROM "sensor_sink"'
-    ).fetchone()
+    con.execute("CREATE TABLE opened (pid INTEGER)")
+    con.commit()
     con.close()
-    assert n == uniq == (hi - lo + 1) == 200
+    return UpsertSink("sensor_sink", ["counter"], SQLiteDialect(), connect)
+
+
+def test_upsert_sink_routes_small_one_partition_frames_to_driver(spark, tmp_path):
+    """The default write mode writes a one-partition frame within the
+    broadcast threshold from the driver (no Python-worker task); a
+    multi-partition frame, or one above the threshold, is written by
+    executor tasks, one connection per partition. Every route converges
+    to the keyed-upsert result."""
+    db = str(tmp_path / "sink.db")
+    sink = _pid_recording_sink(db)
+    sink.ensure_table(SENSOR_SQL_COLUMNS, with_pk=True)
+    assert sink.write_mode == "partition"  # the default
+
+    def writer_pids(frame) -> set[int]:
+        con = sqlite3.connect(db)
+        con.execute("DELETE FROM opened")
+        con.execute('DELETE FROM "sensor_sink"')
+        con.commit()
+        con.close()
+        sink.write(frame, upsert=True)
+        assert _sink_audit(db) == (200, 200, 200)
+        con = sqlite3.connect(db)
+        try:
+            return {p for (p,) in con.execute("SELECT pid FROM opened")}
+        finally:
+            con.close()
+
+    one = sensor_rows(spark, 200).coalesce(1)
+    assert writer_pids(one) == {os.getpid()}
+
+    four = sensor_rows(spark, 200).repartition(4)
+    pids = writer_pids(four)
+    assert pids and os.getpid() not in pids
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")  # below any frame's size estimate
+    try:
+        pids = writer_pids(one)
+    finally:
+        spark.conf.set(key, old)
+    assert pids and os.getpid() not in pids
+
+
+@pytest.mark.parametrize("partitions", [1, 2], ids=["driver", "executor"])
+def test_upsert_sink_commit_failure_raises(spark, tmp_path, partitions):
+    """A commit the database refuses must fail the write: a reader
+    holding an open read transaction blocks SQLite's commit ("database
+    is locked"), the connection's close rolls the rows back, and a
+    write that returned normally would let foreachBatch commit the
+    offsets of rows that never landed."""
+    db = str(tmp_path / "sink.db")
+    sink = UpsertSink(
+        "sensor_sink", ["counter"], SQLiteDialect(),
+        functools.partial(sqlite3.connect, db, timeout=0.1),
+    )
+    sink.ensure_table(SENSOR_SQL_COLUMNS, with_pk=True)
+    reader = sqlite3.connect(db)
+    try:
+        reader.execute("BEGIN")
+        reader.execute('SELECT COUNT(*) FROM "sensor_sink"').fetchone()
+        with pytest.raises(Exception, match="database is locked"):
+            sink.write(sensor_rows(spark, 50).repartition(partitions))
+    finally:
+        reader.close()
+    assert _sink_audit(db) == (0, 0, 0)
+
+
+@pytest.mark.parametrize("field", ["write_mode", "driver_fetch"])
+def test_upsert_sink_rejects_unknown_modes(tmp_path, field):
+    with pytest.raises(ValueError, match=field):
+        UpsertSink(
+            "sensor_sink", ["counter"], SQLiteDialect(),
+            functools.partial(sqlite3.connect, str(tmp_path / "s.db")),
+            **{field: "Driver"},
+        )

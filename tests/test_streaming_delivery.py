@@ -6,6 +6,11 @@ sink on counter continuity:
 - exactly-once (keyed upsert):  rows = uniq = span   (README.md:158-164)
 - at-least-once (append):       no gaps, dups allowed (README.md:121-126)
 - at-most-once (lab mode):      gaps / loss           (README.md:94-99)
+
+The crash cases run on both sink write modes: `driver` (every frame
+through the driver) and the default `partition`, which routes the
+one-file micro-batches here to the driver and larger frames to
+executor tasks.
 """
 
 from __future__ import annotations
@@ -29,6 +34,7 @@ from dataingestiontohana_spark.streaming.pipeline import (
 
 N_ROWS = 100
 N_FILES = 10
+WRITE_MODES = pytest.mark.parametrize("write_mode", ["driver", "partition"])
 
 
 @pytest.fixture()
@@ -38,22 +44,24 @@ def source_dir(spark, tmp_path):
     return str(d)
 
 
-def make_sink(db_path: str) -> UpsertSink:
+def make_sink(db_path: str, write_mode: str = "driver") -> UpsertSink:
     return UpsertSink(
         table="sensor_sink",
         key_cols=["counter"],
         dialect=SQLiteDialect(),
         connection_factory=functools.partial(sqlite3.connect, db_path),
-        write_mode="driver",  # single-writer SQLite file
+        write_mode=write_mode,
     )
 
 
-def make_pipeline(spark, source_dir, tmp_path, mode, fault=None) -> IngestionPipeline:
+def make_pipeline(
+    spark, source_dir, tmp_path, mode, fault=None, write_mode="driver"
+) -> IngestionPipeline:
     return IngestionPipeline(
         spark=spark,
         source_dir=source_dir,
         checkpoint_dir=str(tmp_path / "checkpoint"),
-        sink=make_sink(str(tmp_path / "sink.db")),
+        sink=make_sink(str(tmp_path / "sink.db"), write_mode),
         mode=mode,
         fault=fault,
     )
@@ -74,10 +82,16 @@ def test_exactly_once_clean_run(spark, source_dir, tmp_path):
     assert a.exactly_once and a.n_rows == N_ROWS
 
 
-def test_exactly_once_survives_crash(spark, source_dir, tmp_path):
-    fault = FaultInjector(str(tmp_path / "flag"), FaultInjector.AFTER_WRITE, at_batch=2)
+@WRITE_MODES
+@pytest.mark.parametrize(
+    "point", [FaultInjector.AFTER_WRITE, FaultInjector.BEFORE_WRITE]
+)
+def test_exactly_once_survives_crash(spark, source_dir, tmp_path, point, write_mode):
+    fault = FaultInjector(str(tmp_path / "flag"), point, at_batch=2)
     fault.arm()
-    p = make_pipeline(spark, source_dir, tmp_path, DeliveryMode.EXACTLY_ONCE, fault)
+    p = make_pipeline(
+        spark, source_dir, tmp_path, DeliveryMode.EXACTLY_ONCE, fault, write_mode
+    )
     err = p.run_to_completion()
     assert err is not None  # the injected fault killed the query
 
@@ -85,22 +99,29 @@ def test_exactly_once_survives_crash(spark, source_dir, tmp_path):
     assert 0 < mid.n_rows < N_ROWS  # crashed mid-stream
 
     # operator restarts the graph (README.md:90); checkpoint resumes
-    p2 = make_pipeline(spark, source_dir, tmp_path, DeliveryMode.EXACTLY_ONCE)
+    p2 = make_pipeline(
+        spark, source_dir, tmp_path, DeliveryMode.EXACTLY_ONCE, write_mode=write_mode
+    )
     assert p2.run_to_completion() is None
     a = run_audit(tmp_path)
     assert a.exactly_once and a.n_rows == N_ROWS  # no loss, no dups
 
 
-def test_at_least_once_crash_duplicates_no_loss(spark, source_dir, tmp_path):
+@WRITE_MODES
+def test_at_least_once_crash_duplicates_no_loss(spark, source_dir, tmp_path, write_mode):
     # crash lands AFTER the DB write, BEFORE the offset commit: the
     # classic at-least-once window (the reference hits it by hand-
     # rolling the ack loop; Structured Streaming hits it on replay)
     fault = FaultInjector(str(tmp_path / "flag"), FaultInjector.AFTER_WRITE, at_batch=2)
     fault.arm()
-    p = make_pipeline(spark, source_dir, tmp_path, DeliveryMode.AT_LEAST_ONCE, fault)
+    p = make_pipeline(
+        spark, source_dir, tmp_path, DeliveryMode.AT_LEAST_ONCE, fault, write_mode
+    )
     assert p.run_to_completion() is not None
 
-    p2 = make_pipeline(spark, source_dir, tmp_path, DeliveryMode.AT_LEAST_ONCE)
+    p2 = make_pipeline(
+        spark, source_dir, tmp_path, DeliveryMode.AT_LEAST_ONCE, write_mode=write_mode
+    )
     assert p2.run_to_completion() is None
     a = run_audit(tmp_path)
     assert not a.has_loss  # every counter landed
@@ -108,11 +129,14 @@ def test_at_least_once_crash_duplicates_no_loss(spark, source_dir, tmp_path):
     assert a.uniq == a.span == N_ROWS
 
 
-def test_at_most_once_loses_data(spark, source_dir, tmp_path):
+@WRITE_MODES
+def test_at_most_once_loses_data(spark, source_dir, tmp_path, write_mode):
     # lab mode: the DB write fails but offsets commit anyway -> loss
     fault = FaultInjector(str(tmp_path / "flag"), FaultInjector.FAIL_WRITE, at_batch=1)
     fault.arm()
-    p = make_pipeline(spark, source_dir, tmp_path, DeliveryMode.AT_MOST_ONCE, fault)
+    p = make_pipeline(
+        spark, source_dir, tmp_path, DeliveryMode.AT_MOST_ONCE, fault, write_mode
+    )
     assert p.run_to_completion() is None  # stream survives; data doesn't
     a = run_audit(tmp_path)
     assert a.has_loss and not a.has_duplicates
